@@ -1,0 +1,28 @@
+package servebench
+
+/** Minimal JSON writer for the run record: maps (insertion order kept),
+  * sequences, strings, numbers and booleans. */
+object Json {
+  def apply(v: Any): String = v match {
+    case null => "null"
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case n @ (_: Int | _: Long) => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.map { case (k, x) => quote(k.toString) + ":" + apply(x) }.mkString("{", ",", "}")
+    case s: Iterable[_] => s.map(apply).mkString("[", ",", "]")
+    case other => quote(other.toString)
+  }
+
+  private def quote(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"' => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c => b += c
+    }
+    (b += '"').toString
+  }
+}
