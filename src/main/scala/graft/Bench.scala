@@ -48,21 +48,27 @@ object Bench {
     isolate()
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run (local iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
-    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // a gate that throws is FAILED, not fast: its elapsed time keeps its
+    // place in every total (the fields' semantics are unchanged), and the
+    // gate is counted in n_failed and named in the steady-out file
+    val failed = scala.collection.mutable.SortedSet.empty[String]
+    val gates = SparkEntry.queries
+    def time(name: String): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try { gates(name)(spark, sfDir).count(); () }
+      catch { case _: Throwable => failed += name; () }
       val dt = (System.nanoTime() - t0) / 1e9
       isolate()
       dt
     }
-    val first = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) => name -> time(fn) }.toMap
+    val first = gates.keys.toSeq.sorted
+      .filter(name => only.forall(_.contains(name)))
+      .map(name => name -> time(name)).toMap
     // contention hygiene: the 10 slowest get a second run and report the
     // min — a contended machine (r4's recorded bench ran 2.9x slow) shows
     // up as one-off spikes that a single re-run flattens
     val rerun = first.toSeq.sortBy(-_._2).take(10).map { case (name, t1) =>
-      name -> math.min(t1, time(SparkEntry.queries(name)))
+      name -> math.min(t1, time(name))
     }
     val results = first ++ rerun
     val total = if (results.nonEmpty) results.values.sum else 0.0
@@ -73,9 +79,9 @@ object Bench {
     // number ambient contention and codegen-warm tax can't hold hostage.
     // "value" keeps its historical first-pass semantics for baseline
     // comparability; steady_total/steady_spq are additive.
-    val steady = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) => name -> time(fn) }.toMap
+    val steady = gates.keys.toSeq.sorted
+      .filter(name => only.forall(_.contains(name)))
+      .map(name => name -> time(name)).toMap
     val steadyTotal = if (steady.nonEmpty) steady.values.sum else 0.0
     val steadySpq = if (steady.nonEmpty) steadyTotal / steady.size else 0.0
     // per-gate min across BOTH passes: the ambient-robust number — a
@@ -94,7 +100,8 @@ object Bench {
         .map { case (k, v) => "\"" + k + "\":" + BigDecimal(v)
           .setScale(3, BigDecimal.RoundingMode.HALF_UP) }.mkString("{", ",", "}")
       java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        s"""{"first":${m(results)},"steady":${m(steady)}}""".getBytes("UTF-8"))
+        (s"""{"first":${m(results)},"steady":${m(steady)},"failed":""" +
+          failed.map("\"" + _ + "\"").mkString("[", ",", "]}")).getBytes("UTF-8"))
     }
     // The driver keeps only the LAST ~2000 chars of sbt output and parses
     // the JSON line from that tail; sbt's own "[success] Total time" line
@@ -104,7 +111,7 @@ object Bench {
     // 3-decimal values, slowest queries first, stop before ~1500 chars.
     def r3(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":"""
-    val tail = s""","n_queries":${results.size},"steady_total":${r3(steadyTotal)},"steady_spq":${r3(steadySpq)},"best_total":${r3(bestTotal)},"load_avg":${r3(math.max(load, 0.0))},"load_end":${r3(math.max(loadEnd, 0.0))},"sf":"$sfDir"}"""
+    val tail = s""","n_queries":${results.size},"n_failed":${failed.size},"steady_total":${r3(steadyTotal)},"steady_spq":${r3(steadySpq)},"best_total":${r3(bestTotal)},"load_avg":${r3(math.max(load, 0.0))},"load_end":${r3(math.max(loadEnd, 0.0))},"sf":"$sfDir"}"""
     val budget = 1500 - head.length - tail.length
     val entries = results.toSeq.sortBy(-_._2).map { case (k, v) => "\"" + k + "\":" + r3(v) }
     val sb = new StringBuilder("{")

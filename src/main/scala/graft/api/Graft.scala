@@ -279,19 +279,34 @@ final class Graft(val spark: SparkSession, basePath: String,
   // src/memvid/search/mod.rs:190-232 — hamming ≤ 32, keep ≥
   // max(topK·10, 500)): a (doc_id, simhash) table maintained alongside
   // the lex index shrinks the candidate set BEFORE the postings scorer.
-  // The shrunken set rides the indexed route's allowedIds semi-join
-  // (`search_sketch_indexed` proved the composition; this wires it into
-  // the verbs). Candidate shrink trades recall for speed exactly like
-  // the reference (BM25 re-ranks survivors; a match beyond the hamming
-  // cut is dropped) — `noSketch = true` restores exhaustive ranking.
+  // Candidate shrink trades recall for speed exactly like the reference
+  // (BM25 re-ranks survivors; a match beyond the hamming cut is dropped)
+  // — `noSketch = true` restores exhaustive ranking.
+  //
+  // Single plan: the query is hashed on the driver, and the candidate
+  // set — within(h ≤ 32) ∪ nearest(max(topK·10, 500)), see
+  // [[graft.search.SketchFilter.candidates]] — is a lazy plan that rides
+  // the indexed route's allowedIds semi-join, so the whole pre-filter
+  // executes inside the one ranking query (`search_sketch_indexed`
+  // proved the composition). No action runs before the ranking collect.
+  //
+  // Live-set invariant: the floor must count LIVE versions only, and the
+  // filter applies only on the indexed route, i.e. only while the
+  // postings stamp equals the store version. Then the postings' doc_ids
+  // are exactly the live frames with at least one token — every token of
+  // a live frame becomes a postings row, and any delete, supersede or
+  // vacuum past the stamp makes [[refreshLexIndex]] rebuild — which is
+  // exactly the population sketch rows exist for (zero-token texts get
+  // no sketch). So the sketch table semi-joined with the postings'
+  // doc_ids is the live sketch set, with no latest-active window.
   //
   // Maintenance is APPEND-ONLY SAFE by construction: sketch rows are
   // per-doc-version and ids are never reused, so a superseded/tombstoned
-  // version's row is INERT (its id no longer joins any live posting) and
-  // only MISSING rows (live frames past the stamp) lose recall. The
-  // refresh therefore always appends the post-stamp Active frames'
-  // sketches and restamps — no rebuild case, even across vacuum (the
-  // compacted log keeps live rows' commitSeq). ----
+  // version's row is INERT (the live-set semi-join drops it) and only
+  // MISSING rows (live frames past the stamp) lose recall. The refresh
+  // therefore always appends the post-stamp Active frames' sketches and
+  // restamps — no rebuild case, even across vacuum (the compacted log
+  // keeps live rows' commitSeq). ----
 
   /** Build (or rebuild) the sketch table over the CURRENT live frames
     * (documents AND chunks — the same population search() ranks), stamp
@@ -303,6 +318,10 @@ final class Graft(val spark: SparkSession, basePath: String,
     // interleave the overwrite with an append and strand a torn table
     graft.search.Bm25Index.maintenanceLock(spark, table) {
       val sk = graft.search.SketchFilter.build(searchableFrames, "id", "text")
+      // a full rewrite: also sweeps a leftover warehouse directory with no
+      // catalog entry (a previous JVM's table), which a plain overwrite
+      // rejects with LOCATION_ALREADY_EXISTS
+      graft.ops.Bucketing.dropTableAndLocation(spark, table)
       sk.write.mode(SaveMode.Overwrite).saveAsTable(table)
       spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
         s"('graft.store.version' = '$currentVersion', " +
@@ -347,12 +366,12 @@ final class Graft(val spark: SparkSession, basePath: String,
     * re-classification — two refreshers racing one stale stamp
     * serialize and the loser reads the winner's restamp ("fresh")
     * instead of double-appending the same delta (duplicate (doc_id,
-    * simhash) rows inflate [[graft.search.SketchFilter.candidates]]'
-    * floor count and silently suppress the relaxation — recall loss
-    * beyond the documented trade). A `graft.refresh.pending` marker
-    * lands before the append and clears in the same ALTER as the
-    * restamp; a crash in between leaves it set and the next refresh
-    * rebuilds instead of re-appending.
+    * simhash) rows are dead weight that
+    * [[graft.search.SketchFilter.candidates]] must dedup on every
+    * query). A `graft.refresh.pending` marker lands before the append
+    * and clears in the same ALTER as the restamp; a crash in between
+    * leaves it set and the next refresh rebuilds instead of
+    * re-appending.
     * @return "fresh" | "appended" | "rebuilt" */
   def refreshSketchTable(): String = sketchTable match {
     case None => throw new IllegalStateException(
@@ -872,31 +891,31 @@ final class Graft(val spark: SparkSession, basePath: String,
         if (lexFreshOrHealed(t)) {
           lastSearchRoute = "indexed"
           // the sketch pre-filter rides the indexed route's allowed-id
-          // semi-join; it applies only with TEXT terms to rank (the
-          // reference's has_text_terms guard) and only while the sketch
-          // covers the whole store (stale sketch = missing newest docs —
-          // skipping is the lossless direction)
+          // semi-join as part of the ONE ranking query; it applies only
+          // with TEXT terms to rank (the reference's has_text_terms guard),
+          // only when the query has tokens to hash (a token-less query
+          // has no sketch to compare — skipping is lossless), and only
+          // while the sketch covers the whole store (stale sketch =
+          // missing newest docs — skipping is the lossless direction)
           val allowed = sketchTable.filter(_ => !noSketch)
             .filter(sketchFresh)
             .filter(_ => graft.search.QExpr
               .words(graft.search.QueryParser.parse(query)).exists(_.nonEmpty))
-            .map { sk =>
-              val qh = graft.search.SketchFilter.querySimhash(spark, query)
+            .flatMap(sk => graft.search.SketchFilter.queryHash(query).map { qh =>
               lastSketchApplied = true
-              // floor over LIVE ids only: superseded/tombstoned versions'
-              // sketch rows are inert for membership but would still
-              // count toward the minKeep floor and occupy hamming-nearest
-              // slots — on a churned store the effective live keep falls
-              // below the reference's max(topK·10, 500) contract. The
-              // semi-join moves only the narrow (id) column.
-              val live = frames.latestActive
-                .select(col("id").cast("long").as("doc_id"))
+              // floor over LIVE ids only (dead versions' rows would count
+              // toward the floor and take hamming-nearest slots). The
+              // postings are fresh on this route, so their doc_ids ARE
+              // the live frames with a token — the population the sketch
+              // rows cover (see the sketch section comment)
+              val live = spark.table(t).select(col("doc_id")).distinct()
               graft.search.SketchFilter.candidates(
                 spark.table(sk).join(live, Seq("doc_id"), "left_semi"),
                 qh, topK)
-            }
-          Search.searchIndexed(frames.latestActive, "id", frameCols, query,
-            t, opts, allowedIds = allowed)
+            })
+          Search.searchIndexedWith(frames.latestActive, "id", frameCols,
+            query, t, opts, allowedIds = allowed,
+            pageRows = Some(frames.latestActiveOf))
         } else {
           lastSearchRoute = "corpus"
           Search.search(frames.latestActive, "id", frameCols, query, opts)
@@ -911,10 +930,10 @@ final class Graft(val spark: SparkSession, basePath: String,
       case Some(check) =>
         // the ACL decoration needs ONE frame column (uri / policy
         // metadata) for the BOUNDED hit page only — pin the page once
-        // and push its id list into the frame scan (the snippet-lookup
-        // shape) instead of joining the page against a corpus-column
-        // scan per query. Values are identical: the join was already
-        // id-equi over the page's ids; the isin only prunes the scan.
+        // and look its ids up with one bounded log scan (the snippet-
+        // lookup shape, FrameStore.latestActiveOf) instead of joining the
+        // page against the whole latest-active view per query. Values are
+        // identical: the join was already id-equi over the page's ids.
         // One collect serves both consumers (id list + local relation) —
         // a localCheckpoint + collect pair cost two jobs here (r19).
         val pageRows = ranked.collect()
@@ -923,9 +942,8 @@ final class Graft(val spark: SparkSession, basePath: String,
         val idIdx = ranked.schema.fieldIndex("id")
         val ids = pageRows.map(_.getLong(idIdx)).toSeq
         def withFrameCol(c: org.apache.spark.sql.Column, as: String) =
-          page.join(
-            frames.latestActive.filter(col("id").isin(ids: _*))
-              .select(col("id"), c.as(as)), Seq("id"), "left")
+          page.join(frames.latestActiveOf(ids).select(col("id"), c.as(as)),
+            Seq("id"), "left")
         check match {
           case req: graft.acl.Acl.Request =>
             graft.acl.Acl(withFrameCol(col("uri"), "__acl_uri"),

@@ -16,20 +16,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bucketing {
 
-  /** write `df` as a parquet bucketed+sorted managed table. A leftover
-    * warehouse directory from a PREVIOUS session's metastore (fresh derby,
-    * old spark-warehouse) fails CREATE with LOCATION_ALREADY_EXISTS even
-    * under overwrite — drop both the catalog entry and the stale location
-    * first so the write is idempotent across JVMs. */
-  def writeBucketed(df: DataFrame, tableName: String, nBuckets: Int,
-                    keys: Seq[String],
-                    partitionCols: Seq[String] = Nil): Unit = {
-    val spark = df.sparkSession
+  /** Drop a managed table's catalog entry AND its warehouse location. A
+    * leftover warehouse directory from a PREVIOUS session's metastore
+    * (fresh derby, old spark-warehouse) fails CREATE with
+    * LOCATION_ALREADY_EXISTS even under overwrite; every full rewrite of a
+    * managed table sweeps both first so it is idempotent across JVMs. */
+  def dropTableAndLocation(spark: SparkSession, tableName: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS `$tableName`")
     val loc = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir") + "/" + tableName.toLowerCase)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
+  }
+
+  /** write `df` as a parquet bucketed+sorted managed table (replacing any
+    * table or leftover location of that name, see [[dropTableAndLocation]]) */
+  def writeBucketed(df: DataFrame, tableName: String, nBuckets: Int,
+                    keys: Seq[String],
+                    partitionCols: Seq[String] = Nil): Unit = {
+    dropTableAndLocation(df.sparkSession, tableName)
     val w = df.write
       .bucketBy(nBuckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)

@@ -1,7 +1,8 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** High-level search entry point — the Spark-native `Memvid::search`
   * (reference lifecycle: src/memvid/search/mod.rs:46-299). The boolean/
@@ -143,7 +144,22 @@ object Search {
   def searchIndexed(docs: DataFrame, idCol: String, f: FrameCols,
                     query: String, indexTable: String,
                     opts: Options = Options(),
-                    allowedIds: Option[DataFrame] = None): DataFrame = {
+                    allowedIds: Option[DataFrame] = None): DataFrame =
+    searchIndexedWith(docs, idCol, f, query, indexTable, opts, allowedIds,
+      pageRows = None)
+
+  /** [[searchIndexed]] with the page-text lookup supplied by the caller:
+    * `pageRows(ids)` returns `docs`' rows for those ids (the facade passes
+    * [[graft.store.FrameStore.latestActiveOf]], one bounded log scan
+    * instead of a filter over the whole latest-active view). Every page id
+    * passed the query's membership, so looking it up in `docs` or in the
+    * predicate-filtered view yields the same text. None = filter the view. */
+  private[graft] def searchIndexedWith(docs: DataFrame, idCol: String,
+                                       f: FrameCols, query: String,
+                                       indexTable: String, opts: Options,
+                                       allowedIds: Option[DataFrame],
+                                       pageRows: Option[Seq[Long] => DataFrame])
+      : DataFrame = {
     graft.functions.F.ensureRegistered(docs.sparkSession)
     val ast = QueryParser.parse(query)
     val terms = QExpr.words(ast).distinct
@@ -159,26 +175,39 @@ object Search {
     // the page ids only — the isin list pushes into the frame scan
     // (row-group skipping), the J2 hit→frame lookup done index-first.
     // The page is ≤ offset+topK rows: ONE collect serves every consumer
-    // (the id list and the join probe, as a local relation) — the former
-    // localCheckpoint + collect pair cost two jobs per search (r19).
+    // (the id list and the join probe, as a local relation).
     val page0 = ranked.drop("n_terms_matched").withColumnRenamed("doc_id", "id")
       .orderBy(col("score").desc, col("id"))
       .limit(opts.offset + opts.topK)
-    val pageRows = page0.collect()
-    val page = docs.sparkSession.createDataFrame(
-      java.util.Arrays.asList(pageRows: _*), page0.schema)
-    val scored =
-      if (!opts.withSnippets)
-        page.withColumn("__text", lit("")) // text is dead without snippets
-      else {
-        val idIdx = page0.schema.fieldIndex("id")
-        val ids = pageRows.map(_.getLong(idIdx)).toSeq
-        page.join(
-          filtered.filter(col(idCol).isin(ids: _*))
-            .select(col(idCol).cast("long").as("id"), f.text.as("__text")),
-          Seq("id"), "left")
-      }
-    finish(scored, terms, opts)
+    val rows = page0.collect()
+    val idIdx = page0.schema.fieldIndex("id")
+    val ids = rows.map(_.getLong(idIdx)).toSeq
+    val found =
+      if (!opts.withSnippets) None // text is dead without snippets
+      else Some(pageRows.fold(filtered.filter(col(idCol).isin(ids: _*)))(_(ids)))
+    val text = found.map(
+      _.select(col(idCol).cast("long").as("id"), f.text.as("__text")))
+    if (found.forall(_.isLocal)) {
+      // the page and its text are both on the driver (the facade's
+      // lookup returns a local relation): join them there. The rows are
+      // already in their final order, so the result is a local relation
+      // the snippet projection folds into — reading it runs no job.
+      val byId = text.toSeq.flatMap(_.collect())
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      val scoreIdx = page0.schema.fieldIndex("score")
+      val page = docs.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows.toSeq.drop(opts.offset).map(r =>
+          Row(r.getLong(idIdx), r.get(scoreIdx), byId.get(r.getLong(idIdx)).orNull)): _*),
+        StructType(Seq(page0.schema("id"), page0.schema("score"),
+          StructField("__text", StringType))))
+      decorate(page, terms, opts)
+    } else {
+      // a lazy lookup (the filtered view, a pinned snapshot) stays one
+      // plan with its id list pushed into the scan, under the shared tail
+      val page = docs.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows: _*), page0.schema)
+      finish(page.join(text.get, Seq("id"), "left"), terms, opts)
+    }
   }
 
   /** The indexed route's RANKING plan — postings → predicate/allowlist
@@ -327,15 +356,19 @@ object Search {
     (ranked, filtered)
   }
 
+  /** the result columns: id, score and the snippets of `__text` */
+  private def decorate(scored: DataFrame, terms: Seq[String],
+                       opts: Options): DataFrame =
+    scored.select(col("id"), col("score"),
+      (if (opts.withSnippets)
+         Snippets.snippets(col("__text"), typedLit(terms)) else
+         array().cast("array<string>")).as("snippets"))
+
   /** shared ranking tail: snippets over the top page only, total order,
     * cursor pagination */
   private def finish(scored: DataFrame, terms: Seq[String],
                      opts: Options): DataFrame = {
-    val base = scored
-      .select(col("id"), col("score"),
-        (if (opts.withSnippets)
-           Snippets.snippets(col("__text"), typedLit(terms)) else
-           array().cast("array<string>")).as("snippets"))
+    val base = decorate(scored, terms, opts)
       .orderBy(col("score").desc, col("id"))
     // cursor pagination (fallback.rs:88-196): over-fetch then trim — the
     // limit compiles to TakeOrderedAndProject so no global sort happens

@@ -407,6 +407,30 @@ final class FrameStore(spark: SparkSession, path: String,
     * a plain parquet scan instead of two shuffles. */
   def latestActive: DataFrame = currentSnapshot.getOrElse(latestActiveAsOf(None))
 
+  /** [[latestActive]] restricted to a BOUNDED id list (a result page's
+    * ids), in one job. A pinned snapshot serves it lazily as a filtered
+    * scan (the id list pushes into the parquet reader). Otherwise one log
+    * scan reads the rows of `ids` and of any version superseding one of
+    * them — everything the view's per-id window and supersedes anti-join
+    * consult for these ids — resolves them on the driver the same way
+    * (newest commitSeq per id, Active, not superseded) and returns them as
+    * a local relation with the log's columns. Ids with no live row are
+    * absent. */
+  def latestActiveOf(ids: Seq[Long]): DataFrame = currentSnapshot match {
+    case Some(snap) => snap.filter($"id".isin(ids: _*))
+    case None =>
+      val want = ids.toSet
+      val scanned =
+        if (ids.isEmpty) Seq.empty[Frame]
+        else log.filter($"id".isin(ids: _*) || $"supersedes".isin(ids: _*))
+          .collect().toSeq
+      val superseded = scanned.flatMap(_.supersedes).toSet
+      spark.createDataset(scanned.filter(f => want(f.id)).groupBy(_.id).values
+        .map(_.maxBy(_.commitSeq))
+        .filter(f => f.status == Frame.Active && !superseded(f.id))
+        .toSeq).toDF()
+  }
+
   /** F7 time travel: state as of a commitSeq */
   def asOf(commitSeq: Long): DataFrame = latestActiveAsOf(Some(commitSeq))
 

@@ -127,16 +127,9 @@ object SoakWriterChild {
     // soak caught exactly such a misclassification) plus this child's
     // maintenance lock discipline.
     val lexTbl = s"soak_lex_w$idx"; val skTbl = s"soak_sk_w$idx"
-    Seq(lexTbl, skTbl).foreach { tn =>
-      spark.sql(s"DROP TABLE IF EXISTS `$tn`")
-      // a PRIOR run's crashed child leaves the warehouse DIRECTORY with
-      // no catalog entry in this fresh JVM — DROP TABLE no-ops and the
-      // create then fails LOCATION_ALREADY_EXISTS; sweep the residue
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") + "/" + tn)
-      val lfs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (lfs.exists(loc)) lfs.delete(loc, true): Unit
-    }
+    // a PRIOR run's crashed child leaves the warehouse DIRECTORY with no
+    // catalog entry in this fresh JVM; sweep the residue
+    Seq(lexTbl, skTbl).foreach(graft.ops.Bucketing.dropTableAndLocation(spark, _))
     g.buildLexIndex(lexTbl, stemmed = false)
     g.buildSketchTable(skTbl)
     // aggressive second handle for PUTS: a live peer whose heartbeat goes
