@@ -86,6 +86,11 @@ object Doctor {
     }
   }
 
+  /** the facade-ATTACHED serving index named `name` — an artifact the
+    * facade does not serve has no serving-stamp contract */
+  private def attached(g: Graft, name: Option[String]): Option[ServingIndex[_]] =
+    name.flatMap(n => g.attachedIndexes.find(_.name == n))
+
   /** bounded probe: the doctor counters (six store-wide aggregates) plus
     * per-index staleness counts — every value is a COUNT, never data.
     * Opt-in maintenance probes (file debt, drift) appear only when their
@@ -146,10 +151,8 @@ object Doctor {
     // read) — the vector twin of lex_index_stale: a put() past the
     // stamp exiles ask()'s vector rung to the corpus path until healed
     val vecStale = for {
-      p <- vecPath
-      if g.attachedVec(p).isDefined
-      if graft.vector.IvfIndex.exists(g.spark, p)
-      if g.vecStampStale(p)
+      v <- attached(g, vecPath)
+      if v.stale()
     } yield "vec_index_stale" -> 1L
     // append-delta debt of the persisted IVF index (one FS listing)
     val vecDelta = for {
@@ -164,11 +167,10 @@ object Doctor {
     // the degradation is PERFORMANCE, not serving: a stale sketch makes
     // search() silently skip the candidate shrink (lossless direction),
     // so severity is warning and the heal is the always-append refresh
-    // (dead rows are inert — Graft's sketch section owns that argument)
-    val sketchStale = for {
-      t <- g.attachedSketchTable
-      if g.sketchStampStale(t)
-    } yield "sketch_stale" -> 1L
+    // (dead rows are inert — ServingIndex owns that argument)
+    val sketchStale = g.attachedIndexes.collectFirst {
+      case s: ServingIndex.Sketch if s.stale() => "sketch_stale" -> 1L
+    }
     // the union computed lex_index_stale / vec_index_drift counts
     // unconditionally; re-apply the presence rules they always had
     // (lex: iff a lexTable is configured; drift: iff positive)
@@ -254,7 +256,7 @@ object Doctor {
           // an unattached table, or a delta with deletes/supersedes
           // keeps the rebuild
           val canRefresh = !opts.rebuildLexIndex &&
-            g.attachedLexStemmed(t).isDefined && g.lexDeltaAppendable(t)
+            attached(g, lexTable).exists(_.delta() != ServingIndex.Rebuild)
           Seq(row("action", "index_rebuild",
             if (canRefresh) "refresh_lex_index" else "rebuild_lex_index",
             required = true,
@@ -341,14 +343,14 @@ object Doctor {
             g.refreshLexIndex(): Unit
           case "rebuild_lex_index" =>
             lexTable.foreach { t =>
-              g.attachedLexStemmed(t) match {
-                // the facade SERVES this table: rebuild through the
-                // facade's own build (live frames INCLUDING chunks, the
+              attached(g, lexTable) match {
+                // the facade SERVES this table: rebuild through its
+                // serving index (live frames INCLUDING chunks, the
                 // index's own analyzer, version restamp) so serving
                 // returns to the indexed route — the maintain→serve loop
                 // the reference's doctor verify closes (doctor.rs:140-173)
-                case Some(st) => g.buildLexIndex(t, stemmed = st)
-                case None =>
+                case Some(lx: ServingIndex.Lex) => lx.rebuild()
+                case _ =>
                   // a standalone tracked table keeps its layout through
                   // the doctor rebuild (same auto-detect the facade
                   // build does)
@@ -364,34 +366,21 @@ object Doctor {
               }
             }
           case "compact_lex_index" =>
-            lexTable.foreach { t =>
-              val meta = g.spark.sessionState.catalog.getTableMetadata(
-                org.apache.spark.sql.catalyst.TableIdentifier(t))
-              val nb = meta.bucketSpec.map(_.numBuckets).getOrElse(16)
-              // compaction is value-neutral, so the store-version stamp
-              // survives it — but the swap installs a NEW catalog table,
-              // dropping properties. Re-stamp the prior verdict after the
-              // swap; a crash in between leaves an unstamped (= stale-
-              // looking) index and serving falls back to the corpus —
-              // the safe direction, same as buildLexIndex's stamp order.
-              val stamp = meta.properties.get("graft.store.version")
-              graft.search.Bm25Index.compact(g.spark, t, nb)
-              stamp.foreach(v => g.spark.sql(
-                s"ALTER TABLE `$t` SET TBLPROPERTIES ('graft.store.version' = '$v')"))
-              g.invalidateIndexCaches()
-            }
+            // value-neutral; the swap carries the stamp and the
+            // torn-refresh marker across, so serving verdicts still hold
+            lexTable.foreach(graft.search.Bm25Index.compact(g.spark, _))
           case "compact_vec_index" =>
             vecPath.foreach { p =>
               graft.vector.IvfIndex.compactDeltas(g.spark, p)
               // the path-root version stamp survives (compaction swaps
               // generation DIRS under it), but a cached serving handle
               // points at the deleted generation — reopen on next query
-              g.invalidateIndexCaches()
+              attached(g, vecPath).foreach(_.invalidate())
             }
           case "rebuild_vec_index" =>
             vecPath.foreach { p =>
               graft.vector.IvfIndex.retrain(g.spark, p, vecIdCol, vecCol)
-              g.invalidateIndexCaches()
+              attached(g, vecPath).foreach(_.invalidate())
             }
           case "refresh_snapshot" => g.releaseSnapshot()
           case "deep_verify" => () // the re-probe below IS the deep verify

@@ -26,12 +26,13 @@ import org.apache.spark.sql.functions._
   * @param healOnRead the read-side symmetry of the same idea (the
   *        reference's lazy engine init, search/mod.rs:47-57: a read
   *        brings the engine up to date): a search()/ask() that finds an
-  *        attached index stale first probes whether the post-stamp delta
-  *        is APPEND-ONLY and, if so, runs the O(delta) refresh and
-  *        serves indexed. A delta with deletes/supersedes (or past a
-  *        vacuum) falls back to the corpus path unchanged — a read never
-  *        triggers a corpus-sized rebuild. Off by default: reads that
-  *        mutate derived state deserve an explicit opt-in. */
+  *        attached postings or IVF index stale classifies the post-stamp
+  *        delta under the index's lock and, when it is APPEND-ONLY, runs
+  *        the O(delta) refresh and serves indexed. A delta with
+  *        deletes/supersedes (or past a vacuum) falls back to the corpus
+  *        path unchanged — a read never triggers a corpus-sized
+  *        rebuild. Off by default: reads that mutate derived state
+  *        deserve an explicit opt-in. */
 final class Graft(val spark: SparkSession, basePath: String,
                   embedder: Option[Embedder] = None,
                   autoRefreshIndexes: Boolean = false,
@@ -88,15 +89,12 @@ final class Graft(val spark: SparkSession, basePath: String,
     // (N writers racing one artifact — measured in the 5-writer soak)
     // must not fail the put; serving just stays on the documented
     // stale→corpus fallback until the next refresh wins the lock.
-    if (autoRefreshIndexes && ids.nonEmpty) {
-      def bestEffort(run: => Unit): Unit =
-        try run catch {
+    if (autoRefreshIndexes && ids.nonEmpty)
+      attachedIndexes.foreach { ix =>
+        try ix.refresh(): Unit catch {
           case _: graft.store.StoreLock.StoreLockedException => ()
         }
-      if (lexIndex.isDefined) bestEffort(refreshLexIndex(): Unit)
-      if (vecIndex.isDefined) bestEffort(refreshVecIndex(): Unit)
-      if (sketchTable.isDefined) bestEffort(refreshSketchTable(): Unit)
-    }
+      }
     ids.headOption
   }
 
@@ -173,26 +171,17 @@ final class Graft(val spark: SparkSession, basePath: String,
   /** back to live-log reads */
   def releaseSnapshot(): Unit = frames.releaseSnapshot()
 
-  // ---- persisted-index serving (reference: lazy engine init opens the
-  // on-disk Tantivy segments once they exist, src/memvid/search/mod.rs:
-  // 47-57, and the vector path switches off brute force once an index is
-  // worth it, src/vec.rs:23). The Spark-native form: a bucketed BM25
-  // postings table and a generation-dir IVF index, each stamped with the
-  // store's commit version at build time. search()/ask() route through a
-  // FRESH index (stamp == current commit version) and fall back to the
-  // corpus path the moment the store moves past the stamp — results are
-  // bit-equal either way (`search_facade_indexed`/`ask_facade_indexed`
-  // gate that), the index only changes WHERE the work happens. The
-  // freshness verdict is cached per store mutation epoch, which the
-  // single-writer contract makes exact: the one writer observes every
-  // mutation it performs. ----
+  // ---- persisted-index serving: the BM25 postings table, the sketch
+  // table and the IVF index, each one [[ServingIndex]] (stamp protocol,
+  // lock discipline and the sketch's inert-rows rule are stated there) ----
 
-  private var lexIndex: Option[(String, Boolean)] = None // (table, stemmed)
-  private var lexFreshCache: Option[((Long, Long), Boolean)] = None
-  private var vecIndex: Option[(String, Int)] = None // (path, nprobe)
-  private var vecHandleCache: Option[((Long, Long), Option[graft.vector.IvfIndex.Handle])] = None
-  private var sketchTable: Option[String] = None
-  private var sketchFreshCache: Option[((Long, Long), Boolean)] = None
+  private var lexIndex: Option[ServingIndex.Lex] = None
+  private var vecIndex: Option[ServingIndex.Vec] = None
+  private var sketchTable: Option[ServingIndex.Sketch] = None
+
+  /** the attached serving indexes — the doctor's view of serving state */
+  private[api] def attachedIndexes: Seq[ServingIndex[_]] =
+    Seq(lexIndex, vecIndex, sketchTable).flatten
 
   /** freshness-cache key: the in-process mutation epoch AND the
     * persisted cross-process watermark — a FOREIGN writer's commit (two
@@ -200,7 +189,7 @@ final class Graft(val spark: SparkSession, basePath: String,
     * next query re-derives the verdict and falls back to the corpus path
     * instead of serving a silently-stale index. One tiny FS read per
     * query; the single-writer fast path is unchanged. */
-  private def storeMovedKey: (Long, Long) =
+  private[api] def storeMovedKey: (Long, Long) =
     (frames.mutationEpoch, frames.persistedWatermark)
 
   /** route the LAST search()/ask() retrieval took: "indexed" | "corpus" —
@@ -210,17 +199,19 @@ final class Graft(val spark: SparkSession, basePath: String,
   @volatile var lastAskVecRoute: String = "corpus"
   @volatile var lastAskLexRoute: String = "corpus"
 
-  /** everything search() scans, in index form: ALL live frames
-    * (documents AND chunks — chunk-level retrieval is part of the search
-    * surface), id + text only */
-  private def searchableFrames: DataFrame =
-    frames.latestActive.select(col("id"),
-      coalesce(col("text"), lit("")).as("text"))
+  /** did the LAST search() apply the sketch pre-filter? — the gate/spec
+    * observable (like lastSearchRoute) */
+  @volatile var lastSketchApplied: Boolean = false
+
+  private def attached[I](ix: Option[I], verb: String, what: String,
+                          attach: String): I = ix.getOrElse(
+    throw new IllegalStateException(s"$verb: no attached $what ($attach first)"))
 
   /** Build (or rebuild) the persisted BM25 postings table over the CURRENT
-    * live frames, stamp it with the store's commit version, and attach it
-    * for serving. Re-running after mutations is the maintenance loop:
-    * rebuild → restamp → serving returns to the indexed path.
+    * live frames (documents AND chunks), stamp it with the store's commit
+    * version, and attach it for serving: search()/ask() route through it
+    * while the stamp is current and fall back to the corpus BM25 (same
+    * scores) once the store moves past it.
     * @param partitionByTrack directory-partition the postings by the
     *        frames' track (low-cardinality by contract): a `track:`
     *        conjunct then prunes whole directories out of the indexed
@@ -233,630 +224,94 @@ final class Graft(val spark: SparkSession, basePath: String,
                     nBuckets: Int = 16,
                     partitionByTrack: Boolean = false,
                     withPositions: Boolean = false): Unit = {
-    val tracked = partitionByTrack || (spark.catalog.tableExists(table) &&
-      spark.table(table).columns.contains("track"))
-    val src = if (!tracked) searchableFrames
-      else frames.latestActive.select(col("id"),
-        coalesce(col("text"), lit("")).as("text"), col("track"))
-    graft.search.Bm25Index.write(src, "id", "text", table,
-      stemmed = stemmed, nBuckets = nBuckets,
-      trackCol = if (tracked) Some("track") else None,
-      withPositions = withPositions)
-    // stamp AFTER the build/swap: a crash in between leaves an unstamped
-    // (= stale-looking) index and serving falls back to the corpus — the
-    // safe direction
-    spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-      s"('graft.store.version' = '$currentVersion')")
-    attachLexIndex(table, stemmed)
+    val ix = new ServingIndex.Lex(this, table, stemmed)
+    ix.rebuild(ix.write(nBuckets, partitionByTrack, withPositions))
+    lexIndex = Some(ix)
   }
 
   /** Attach an existing postings table for serving (no build). Serving
     * uses it only while its version stamp matches the store. */
-  def attachLexIndex(table: String, stemmed: Boolean = true): Unit = {
-    lexIndex = Some((table, stemmed)); lexFreshCache = None
-  }
+  def attachLexIndex(table: String, stemmed: Boolean = true): Unit =
+    lexIndex = Some(new ServingIndex.Lex(this, table, stemmed))
 
-  def detachLexIndex(): Unit = { lexIndex = None; lexFreshCache = None }
+  def detachLexIndex(): Unit = lexIndex = None
 
-  /** stemming of the ATTACHED serving index, if `table` is it — the
-    * doctor's rebuild consults this so a facade-served index is rebuilt
-    * through [[buildLexIndex]] (same content contract: live frames
-    * INCLUDING chunks, version restamp, serving returns to the indexed
-    * route) instead of the standalone doc-only rebuild */
-  private[api] def attachedLexStemmed(table: String): Option[Boolean] =
-    lexIndex.collect { case (t, st) if t == table => st }
-
-  /** doctor hook: maintenance rewrote an attached index artifact under
-    * the same name/path (compact swap, retrain generation) — drop the
-    * cached serving verdict/handle so the next query reopens the current
-    * artifact instead of a deleted generation */
-  private[api] def invalidateIndexCaches(): Unit = {
-    lexFreshCache = None; vecHandleCache = None; sketchFreshCache = None
-  }
-
-  // ---- F10 sketch pre-filter as FACADE behavior (reference: applied
-  // inside search() by default with a `no_sketch` opt-out,
-  // src/memvid/search/mod.rs:190-232 — hamming ≤ 32, keep ≥
-  // max(topK·10, 500)): a (doc_id, simhash) table maintained alongside
-  // the lex index shrinks the candidate set BEFORE the postings scorer.
-  // Candidate shrink trades recall for speed exactly like the reference
-  // (BM25 re-ranks survivors; a match beyond the hamming cut is dropped)
-  // — `noSketch = true` restores exhaustive ranking.
-  //
-  // Single plan: the query is hashed on the driver, and the candidate
-  // set — within(h ≤ 32) ∪ nearest(max(topK·10, 500)), see
-  // [[graft.search.SketchFilter.candidates]] — is a lazy plan that rides
-  // the indexed route's allowedIds semi-join, so the whole pre-filter
-  // executes inside the one ranking query (`search_sketch_indexed`
-  // proved the composition). No action runs before the ranking collect.
-  //
-  // Live-set invariant: the floor must count LIVE versions only, and the
-  // filter applies only on the indexed route, i.e. only while the
-  // postings stamp equals the store version. Then the postings' doc_ids
-  // are exactly the live frames with at least one token — every token of
-  // a live frame becomes a postings row, and any delete, supersede or
-  // vacuum past the stamp makes [[refreshLexIndex]] rebuild — which is
-  // exactly the population sketch rows exist for (zero-token texts get
-  // no sketch). So the sketch table semi-joined with the postings'
-  // doc_ids is the live sketch set, with no latest-active window.
-  //
-  // Maintenance is APPEND-ONLY SAFE by construction: sketch rows are
-  // per-doc-version and ids are never reused, so a superseded/tombstoned
-  // version's row is INERT (the live-set semi-join drops it) and only
-  // MISSING rows (live frames past the stamp) lose recall. The refresh
-  // therefore always appends the post-stamp Active frames' sketches and
-  // restamps — no rebuild case, even across vacuum (the compacted log
-  // keeps live rows' commitSeq). ----
-
-  /** Build (or rebuild) the sketch table over the CURRENT live frames
-    * (documents AND chunks — the same population search() ranks), stamp
-    * it with the store's commit version, and attach it: search() then
-    * pre-filters by default (opt out per call with `noSketch`). */
+  /** Build (or rebuild) the F10 sketch table — (doc_id, simhash) over the
+    * CURRENT live frames, the population search() ranks — stamp it, and
+    * attach it: search() then pre-filters by default (reference: on
+    * inside search() with a `no_sketch` opt-out, search/mod.rs:190-232 —
+    * hamming ≤ 32, keep ≥ max(topK·10, 500); BM25 re-ranks survivors, so
+    * a match beyond the cut is dropped, the reference's recall-for-speed
+    * trade). The candidate set is a lazy plan riding the indexed route's
+    * allowed-id semi-join ([[graft.search.SketchFilter.candidates]]), so
+    * the pre-filter runs inside the one ranking query. */
   def buildSketchTable(table: String): Unit = {
-    // same maintenance-lock discipline as the postings rebuild: two
-    // builders (or a builder racing a refresher's append) would otherwise
-    // interleave the overwrite with an append and strand a torn table
-    graft.search.Bm25Index.maintenanceLock(spark, table) {
-      val sk = graft.search.SketchFilter.build(searchableFrames, "id", "text")
-      // a full rewrite: also sweeps a leftover warehouse directory with no
-      // catalog entry (a previous JVM's table), which a plain overwrite
-      // rejects with LOCATION_ALREADY_EXISTS
-      graft.ops.Bucketing.dropTableAndLocation(spark, table)
-      sk.write.mode(SaveMode.Overwrite).saveAsTable(table)
-      spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-        s"('graft.store.version' = '$currentVersion', " +
-        "'graft.refresh.pending' = '0')")
-    }
-    attachSketchTable(table)
+    val ix = new ServingIndex.Sketch(this, table)
+    ix.rebuild()
+    sketchTable = Some(ix)
   }
 
   /** Attach an existing sketch table; the pre-filter only applies while
     * its version stamp matches the store (a stale sketch is missing the
     * newest docs' rows — skipping it is the lossless direction). */
-  def attachSketchTable(table: String): Unit = {
-    sketchTable = Some(table); sketchFreshCache = None
-  }
+  def attachSketchTable(table: String): Unit =
+    sketchTable = Some(new ServingIndex.Sketch(this, table))
 
-  def detachSketchTable(): Unit = { sketchTable = None; sketchFreshCache = None }
-
-  private def sketchFresh(table: String): Boolean = {
-    val key = storeMovedKey
-    sketchFreshCache match {
-      case Some((k, v)) if k == key => v
-      case _ =>
-        val fresh = spark.catalog.tableExists(table) && {
-          val props = spark.sessionState.catalog.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(table)).properties
-          props.get("graft.store.version").contains(currentVersion.toString)
-        }
-        sketchFreshCache = Some((key, fresh))
-        fresh
-    }
-  }
-
-  /** Catch the attached sketch table up to the store: sketches of the
-    * post-stamp ACTIVE frames append, then the stamp advances. Always
-    * O(delta) — dead versions' rows are inert (see the section comment),
-    * so unlike the lex/vec refresh there is no delete/supersede rebuild
-    * case (only a missing/never-stamped/torn table rebuilds).
-    *
-    * Concurrent-maintainer + torn-refresh safety (same discipline as
-    * [[refreshLexIndex]]): the stamp-read → append → restamp leg runs
-    * atomically under the table's maintenance lock with an in-lock
-    * re-classification — two refreshers racing one stale stamp
-    * serialize and the loser reads the winner's restamp ("fresh")
-    * instead of double-appending the same delta (duplicate (doc_id,
-    * simhash) rows are dead weight that
-    * [[graft.search.SketchFilter.candidates]] must dedup on every
-    * query). A `graft.refresh.pending` marker lands before the append
-    * and clears in the same ALTER as the restamp; a crash in between
-    * leaves it set and the next refresh rebuilds instead of
-    * re-appending.
-    * @return "fresh" | "appended" | "rebuilt" */
-  def refreshSketchTable(): String = sketchTable match {
-    case None => throw new IllegalStateException(
-      "refreshSketchTable: no attached sketch table (attachSketchTable first)")
-    case Some(table) =>
-      // (stamp, torn-refresh pending)
-      def snapshot(): (Option[Long], Boolean) =
-        if (!spark.catalog.tableExists(table)) (None, false)
-        else {
-          val props = spark.sessionState.catalog.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(table)).properties
-          (props.get("graft.store.version").flatMap(_.toLongOption),
-           props.get("graft.refresh.pending").contains("1"))
-        }
-      val cur0 = currentVersion
-      val (stamp0, pending0) = snapshot()
-      // lock-free only on a STABLE observation (see refreshLexIndex: a
-      // pending marker seen from outside the lock can be a peer's healthy
-      // in-flight append — it must re-classify under the lock)
-      if (!pending0 && stamp0.contains(cur0)) "fresh"
-      else {
-        val outcome = graft.search.Bm25Index.maintenanceLock(spark, table) {
-          val cur = currentVersion
-          val (stamp, pending) = snapshot()
-          if (!pending && stamp.contains(cur)) "fresh"
-          else if (stamp.isEmpty || pending) "needs_rebuild"
-          else {
-            val delta = frames.log.filter(
-                col("commitSeq") > stamp.get && col("commitSeq") <= cur)
-              .filter(col("status") === graft.model.Frame.Active)
-              .select(col("id"), coalesce(col("text"), lit("")).as("text"))
-            spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-              "('graft.refresh.pending' = '1')")
-            graft.search.SketchFilter.build(delta, "id", "text")
-              .write.mode(SaveMode.Append).saveAsTable(table)
-            spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-              s"('graft.store.version' = '$cur', 'graft.refresh.pending' = '0')")
-            sketchFreshCache = None
-            "appended"
-          }
-        }
-        if (outcome == "needs_rebuild") { // missing/never-stamped/torn
-          buildSketchTable(table)
-          "rebuilt"
-        } else outcome
-      }
-  }
-
-  /** did the LAST search() apply the sketch pre-filter? — the gate/spec
-    * observable (like lastSearchRoute) */
-  @volatile var lastSketchApplied: Boolean = false
-
-  /** the facade-ATTACHED sketch table, if any — the doctor's sketch
-    * probe consults this (a standalone table has no serving contract) */
-  private[api] def attachedSketchTable: Option[String] = sketchTable
-
-  /** is the attached sketch table's serving stamp behind the store, its
-    * refresh torn, or the table missing? — the doctor's `sketch_stale`
-    * probe. A stale sketch silently degrades search() to no-prefilter
-    * (correct but slower at scale — the F10 candidate shrink stops
-    * applying), so the doctor plans the always-append refresh. */
-  private[api] def sketchStampStale(table: String): Boolean =
-    !spark.catalog.tableExists(table) || {
-      val props = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)).properties
-      !props.get("graft.store.version").contains(currentVersion.toString) ||
-        props.get("graft.refresh.pending").contains("1")
-    }
-
-  private def lexIndexFresh(table: String): Boolean = {
-    val key = storeMovedKey
-    lexFreshCache match {
-      case Some((k, v)) if k == key => v
-      case _ =>
-        val fresh = spark.catalog.tableExists(table) && {
-          val props = spark.sessionState.catalog.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(table)).properties
-          props.get("graft.store.version").contains(currentVersion.toString)
-        }
-        lexFreshCache = Some((key, fresh))
-        fresh
-    }
-  }
+  def detachSketchTable(): Unit = sketchTable = None
 
   /** Build (or rebuild) the persisted IVF index over the live documents'
-    * embeddings, stamp, and attach. Centroids train with Lloyd iterations
-    * over the current embedding table (deterministic seed rows). */
+    * embeddings, stamp, and attach: ask()'s vector rung then serves from
+    * it (reference ANN switch, src/vec.rs:23). Centroids train with Lloyd
+    * iterations over the current embedding table (deterministic seed
+    * rows). */
   def buildVecIndex(path: String, k: Int = 4, iters: Int = 2,
                     nprobe: Int = 4): Unit = {
-    // pin: the embedder UDF runs once, not once per Lloyd iteration
-    val emb = embeddingsTable.localCheckpoint()
-    // deterministic seeds: the k lowest-id live vectors
-    val seeds = emb.orderBy(col("id")).limit(k).collect().zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Float](1).map(_.toDouble).toArray) }
-      .toSeq
-    require(seeds.nonEmpty, "buildVecIndex: store has no live documents")
-    val (cents, _) =
-      graft.vector.VectorSearch.kmeansLloyd(emb, "vector", seeds, iters)
-    graft.vector.IvfIndex.write(emb, "id", "vector", path,
-      cents.map { case (cid, c) => (cid, c.map(_.toFloat)) })
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$path/_GRAFT_STORE_VERSION"), true)
-    out.write(currentVersion.toString.getBytes("UTF-8")); out.close()
-    attachVecIndex(path, nprobe)
+    val ix = new ServingIndex.Vec(this, path, nprobe)
+    ix.rebuild(ix.train(k, iters))
+    vecIndex = Some(ix)
   }
 
   /** Attach an existing IVF index for ask()'s vector rung; served only
     * while its version stamp matches the store. @param nprobe clusters
     * probed per query (pass the index's cluster count for exact parity
     * with brute force) */
-  def attachVecIndex(path: String, nprobe: Int = 4): Unit = {
-    vecIndex = Some((path, nprobe)); vecHandleCache = None
-  }
+  def attachVecIndex(path: String, nprobe: Int = 4): Unit =
+    vecIndex = Some(new ServingIndex.Vec(this, path, nprobe))
 
-  def detachVecIndex(): Unit = { vecIndex = None; vecHandleCache = None }
-
-  /** fresh handle or None, cached per (mutation epoch, persisted
-    * watermark) — see [[storeMovedKey]] */
-  private def vecServingHandle(path: String): Option[graft.vector.IvfIndex.Handle] = {
-    val key = storeMovedKey
-    vecHandleCache match {
-      case Some((k, h)) if k == key => h
-      case _ =>
-        val fs = new org.apache.hadoop.fs.Path(path)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val stampPath = new org.apache.hadoop.fs.Path(s"$path/_GRAFT_STORE_VERSION")
-        val fresh = graft.vector.IvfIndex.exists(spark, path) &&
-          fs.exists(stampPath) && {
-            val in = fs.open(stampPath)
-            val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-            s == currentVersion.toString
-          }
-        val h = if (fresh) Some(graft.vector.IvfIndex.read(spark, path)) else None
-        vecHandleCache = Some((key, h))
-        h
-    }
-  }
+  def detachVecIndex(): Unit = vecIndex = None
 
   // ---- incremental serving catch-up (reference: instant-index updates
-  // the engine WITHIN the commit, src/memvid/search/builders.rs:12-44 —
-  // a mutation keeps the serving index current instead of exiling
-  // queries to a corpus scan until a full rebuild). The Spark-native
-  // form is explicit maintenance: refresh*Index() computes the frames
-  // past the index's version stamp and APPENDS them through the gated
-  // incremental primitives ([[graft.search.Bm25Index.append]] /
-  // [[graft.vector.IvfIndex.append]]), then restamps — O(|delta|) work.
-  // A delta that breaks the append contract (tombstones or superseding
-  // versions invalidate already-indexed postings/vectors) falls back to
-  // the full rebuild EXPLICITLY. At 100 TB the difference is the
-  // corpus/delta ratio: one put() no longer costs a corpus-sized
-  // rebuild to restore indexed serving.
-  //
-  // Torn-refresh safety: a 'refresh pending' marker lands BEFORE the
-  // append and clears only after (lex: in the same ALTER as; vec:
-  // after) the restamp. A crash between append and restamp leaves the
-  // marker set; the next refresh sees it and takes the rebuild path
-  // instead of re-appending the same delta (which would double-count
-  // postings / duplicate candidate ids). Concurrent-maintainer safety:
-  // the whole stamp-read → append → restamp leg runs ATOMICALLY under
-  // the index artifact's maintenance lock with an in-lock
-  // re-classification, so two refreshers racing one stale stamp
-  // serialize and the loser returns "fresh" — across threads AND
-  // processes (the lock is the cross-process lockfile).
+  // the engine WITHIN the commit, src/memvid/search/builders.rs:12-44).
+  // refresh*() appends the log delta past the stamp through the gated
+  // incremental primitives and restamps — O(|delta|) work; a delta that
+  // breaks the append contract falls back to the full rebuild EXPLICITLY.
+  // @return "fresh" (stamp already current — nothing to do), "appended"
+  // (delta appended + restamped), or "rebuilt" (the delta broke the
+  // append contract, a prior refresh was torn, or the artifact is
+  // missing — see [[ServingIndex]] for the classification) ----
 
   /** Catch the attached BM25 serving index up to the store's current
-    * version. @return "fresh" (stamp already current — nothing to do),
-    * "appended" (post-stamp delta appended into the bucketed postings +
-    * restamped; serving returns to the indexed route at delta cost), or
-    * "rebuilt" (the delta contained deletes/supersedes — beyond the
-    * append contract — or a prior refresh was torn, so the index was
-    * fully rebuilt via [[buildLexIndex]]). */
-  def refreshLexIndex(): String = lexIndex match {
-    case None => throw new IllegalStateException(
-      "refreshLexIndex: no attached lexical index (attachLexIndex first)")
-    case Some((table, stemmed)) =>
-      // (exists, stamp, torn-refresh pending, bucket count)
-      def snapshot(): (Boolean, Option[Long], Boolean, Int) = {
-        val exists = spark.catalog.tableExists(table)
-        val meta = if (exists) Some(spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(table))) else None
-        (exists,
-         meta.flatMap(_.properties.get("graft.store.version")).flatMap(_.toLongOption),
-         meta.exists(_.properties.get("graft.refresh.pending").contains("1")),
-         meta.flatMap(_.bucketSpec.map(_.numBuckets)).getOrElse(16))
-      }
-      // a vacuum AFTER the stamp purged the very rows this classification
-      // reads (a deleted doc's tombstone vanishes from the log, the delta
-      // looks empty/append-only, and an append would restamp an index
-      // still carrying the ghost postings) — the log cannot answer, so
-      // rebuild. `lastVacuumSeq == stampV` is safe: the index was current
-      // at the vacuum and compaction is value-neutral for the live view.
-      def breaksAppend(stampV: Long, cur: Long): Boolean =
-        frames.lastVacuumSeq > stampV ||
-        frames.log.filter(
-            col("commitSeq") > stampV && col("commitSeq") <= cur)
-          .filter(col("status") =!= graft.model.Frame.Active ||
-            col("supersedes").isNotNull)
-          .limit(1).count() > 0
-      def rebuild(nBuckets: Int): String = {
-        buildLexIndex(table, stemmed, nBuckets)
-        spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-          "('graft.refresh.pending' = '0')")
-        "rebuilt"
-      }
-      val cur0 = currentVersion
-      val (exists0, stamp0, pending0, nb0) = snapshot()
-      // Unlocked fast paths may only act on STABLE observations. A
-      // pending marker or a missing/unreadable stamp seen from OUTSIDE
-      // the lock can be another process's healthy in-flight append (the
-      // marker is set and cleared inside its locked leg) — classifying
-      // it as torn here raced a REBUILD against that append (found by
-      // SoakMultiWriter: spurious 'rebuilt' outcomes in an append-only
-      // workload). Only a current stamp ("fresh") or a present-stamp
-      // delta with deletes/supersedes ("rebuild" — a delta never
-      // un-breaks) are lock-free decisions; everything else
-      // re-classifies under the lock, where pending genuinely means
-      // torn.
-      if (!pending0 && stamp0.contains(cur0)) "fresh"
-      else if (exists0 && !pending0 && stamp0.isDefined &&
-               breaksAppend(stamp0.get, cur0)) rebuild(nb0)
-      else {
-        // the append leg is ATOMIC under the table's maintenance lock,
-        // RE-classified inside it: two maintainers racing one stale
-        // stamp serialize, and the loser re-reads the winner's restamp
-        // ("fresh") instead of double-appending the same delta
-        val outcome = graft.search.Bm25Index.maintenanceLock(spark, table) {
-          val cur = currentVersion
-          val (exists, stamp, pending, nb) = snapshot()
-          if (!pending && stamp.contains(cur)) "fresh"
-          else if (!exists || stamp.isEmpty || pending ||
-                   breaksAppend(stamp.get, cur)) "needs_rebuild"
-          else {
-            // bound the delta by BOTH stamps so the restamp covers
-            // exactly the appended rows even if a foreign writer
-            // commits mid-refresh
-            val delta = frames.log.filter(
-              col("commitSeq") > stamp.get && col("commitSeq") <= cur)
-            spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-              "('graft.refresh.pending' = '1')")
-            // a track-partitioned table's delta must land in the right
-            // partition directories — carry the frames' track through
-            val tracked = spark.table(table).columns.contains("track")
-            graft.search.Bm25Index.appendUnlocked(
-              delta.select(col("id") +:
-                coalesce(col("text"), lit("")).as("text") +:
-                (if (tracked) Seq(col("track")) else Nil): _*),
-              "id", "text", table, stemmed, nb,
-              trackCol = if (tracked) Some("track") else None)
-            // restamp + clear in ONE catalog update: either both land
-            // (refresh complete) or neither (marker still set → rebuild)
-            spark.sql(s"ALTER TABLE `$table` SET TBLPROPERTIES " +
-              s"('graft.store.version' = '$cur', 'graft.refresh.pending' = '0')")
-            lexFreshCache = None
-            "appended"
-          }
-        }
-        if (outcome == "needs_rebuild") rebuild(nb0) else outcome
-      }
-  }
+    * version; a rebuild keeps the table's analyzer and layout. */
+  def refreshLexIndex(): String = attached(lexIndex, "refreshLexIndex",
+    "lexical index", "attachLexIndex").refresh()
 
-  /** Can the stamped postings table catch up by APPEND? — the doctor's
-    * plan-time probe, the same classification [[refreshLexIndex]] runs:
-    * true = the post-stamp delta is append-only; false = a rebuild is
-    * needed (missing/unparseable stamp, torn-refresh marker, or
-    * deletes/supersedes in the delta). One limit(1) count over the
-    * commitSeq-filtered log. */
-  private[api] def lexDeltaAppendable(table: String): Boolean = {
-    if (!spark.catalog.tableExists(table)) return false
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val stamp = meta.properties.get("graft.store.version").flatMap(_.toLongOption)
-    val pending = meta.properties.get("graft.refresh.pending").contains("1")
-    if (stamp.isEmpty || pending) false
-    else if (frames.lastVacuumSeq > stamp.get) false // log purged past the stamp
-    else frames.log.filter(
-        col("commitSeq") > stamp.get && col("commitSeq") <= currentVersion)
-      .filter(col("status") =!= graft.model.Frame.Active ||
-        col("supersedes").isNotNull)
-      .limit(1).count() == 0
-  }
-
-  /** the lex freshness check, with the [[healOnRead]] rung in front: a
-    * stale stamp whose delta is append-only heals via the O(delta)
-    * refresh and serves indexed; anything else (deletes, supersedes,
-    * vacuumed-past deltas, torn markers) reports stale and the caller
-    * falls back to the corpus — a read never runs a rebuild. (A foreign
-    * writer racing between the probe and the refresh could still push
-    * the refresh to its rebuild path; the refresh lock re-classifies, so
-    * the result is correct either way — the probe is the cost bound for
-    * the single-writer case, not a semantic gate.) */
-  /** is `anchor`'s maintenance lock currently unheld? — the read-path
-    * heal's cheap skip probe: if a peer is mid-maintenance, the read
-    * serves corpus NOW instead of queueing up to the full acquire
-    * timeout behind it (the peer's restamp serves the next read
-    * indexed anyway). One FS existence check; non-atomic by design —
-    * the refresh keeps its own lock for correctness, and the
-    * StoreLockedException catch below backstops the race window. */
-  private def maintenanceIdle(anchor: String): Boolean =
-    graft.store.StoreLock.currentOwner(spark, anchor).isEmpty
-
-  private def lexLockAnchor(table: String): String =
-    spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") + "/" + table
-
-  private def lexFreshOrHealed(table: String): Boolean =
-    lexIndexFresh(table) ||
-      (healOnRead && maintenanceIdle(lexLockAnchor(table)) &&
-        lexDeltaAppendable(table) && {
-        // the heal is best-effort INSIDE a read: under maintenance-lock
-        // contention (N writers racing one artifact) the refresh can
-        // time out on acquire — a READ must degrade to the corpus path,
-        // never die for maintenance it didn't need (the 5-writer soak
-        // killed a reader exactly here before this catch)
-        try { refreshLexIndex(): Unit } catch {
-          case _: graft.store.StoreLock.StoreLockedException => ()
-        }
-        lexIndexFresh(table)
-      })
-
-  private def vecStampPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_GRAFT_STORE_VERSION")
-  private def vecPendingPath(path: String) =
-    new org.apache.hadoop.fs.Path(s"$path/_GRAFT_REFRESH_PENDING")
-  private def hfs(path: String) = new org.apache.hadoop.fs.Path(path)
-    .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Outer None = stamp file ABSENT (the index never participated in
-    * serving — not stale, nothing to heal). Inner None = stamp file
-    * PRESENT but unreadable/unparseable — a torn or corrupt stamp, which
-    * must read as STALE (serving already falls back to the corpus on the
-    * string compare; without this distinction the doctor would never
-    * plan the refresh that re-stamps it and the index stays silently
-    * unserved until a manual rebuild). */
-  private def readVecStampRaw(path: String): Option[Option[Long]] = {
-    val fs = hfs(path)
-    try {
-      if (!fs.exists(vecStampPath(path))) None
-      else Some {
-        val in = fs.open(vecStampPath(path))
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-        s.toLongOption
-      }
-    } catch {
-      // exists() succeeded but the read failed → present-but-unreadable;
-      // if even exists() throws, surface as absent (nothing provable)
-      case scala.util.control.NonFatal(_) =>
-        try { if (fs.exists(vecStampPath(path))) Some(None) else None }
-        catch { case scala.util.control.NonFatal(_) => None }
-    }
-  }
-
-  private def readVecStamp(path: String): Option[Long] =
-    readVecStampRaw(path).flatten
-
-  /** nprobe of the ATTACHED vector index, if `path` is it — the doctor
-    * consults this so staleness healing only applies to an index the
-    * facade actually serves from (a standalone artifact has no serving
-    * stamp contract) */
-  private[api] def attachedVec(path: String): Option[Int] =
-    vecIndex.collect { case (p, np) if p == path => np }
-
-  /** can the stamped IVF index catch up by APPEND? — the vector twin of
-    * [[lexDeltaAppendable]] (same classification [[refreshVecIndex]]
-    * runs): false on a missing/unparseable stamp, a torn-refresh marker,
-    * deletes/supersedes in the delta, or a vacuum past the stamp. */
-  private[api] def vecDeltaAppendable(path: String): Boolean = {
-    if (!graft.vector.IvfIndex.exists(spark, path)) return false
-    val stamp = readVecStamp(path)
-    if (stamp.isEmpty || hfs(path).exists(vecPendingPath(path))) false
-    else if (frames.lastVacuumSeq > stamp.get) false
-    else frames.log.filter(
-        col("commitSeq") > stamp.get && col("commitSeq") <= currentVersion)
-      .filter(col("status") =!= graft.model.Frame.Active ||
-        col("supersedes").isNotNull)
-      .limit(1).count() == 0
-  }
-
-  /** [[vecServingHandle]] with the [[healOnRead]] rung — see
-    * [[lexFreshOrHealed]] for the contract */
-  private def vecHandleOrHealed(path: String): Option[graft.vector.IvfIndex.Handle] =
-    vecServingHandle(path).orElse {
-      if (healOnRead && maintenanceIdle(path) && vecDeltaAppendable(path)) {
-        // best-effort inside a read — see lexFreshOrHealed: a contended
-        // maintenance lock must degrade the read to corpus, not kill it
-        try { refreshVecIndex(): Unit } catch {
-          case _: graft.store.StoreLock.StoreLockedException => ()
-        }
-        vecServingHandle(path)
-      } else None
-    }
-
-  /** is the serving stamp of an attached vector index behind the store
-    * (or a refresh torn)? — the doctor's vec_index_stale probe. An
-    * UNSTAMPED index is not "stale": it never participated in serving.
-    * A stamp that is present but unparseable IS stale (see
-    * [[readVecStampRaw]] — the doctor must heal it). */
-  private[api] def vecStampStale(path: String): Boolean =
-    readVecStampRaw(path).exists(_.forall(_ != currentVersion)) ||
-      hfs(path).exists(vecPendingPath(path))
+  /** Catch the attached sketch table up to the store: the post-stamp
+    * ACTIVE frames' sketches append, then the stamp advances. Always
+    * O(delta) — dead versions' rows are inert — so only a missing,
+    * never-stamped or torn table rebuilds. */
+  def refreshSketchTable(): String = attached(sketchTable,
+    "refreshSketchTable", "sketch table", "attachSketchTable").refresh()
 
   /** Catch the attached IVF serving index up to the store: new document
     * frames past the stamp are embedded and appended as a committed
     * delta under the STANDING codebook (no retrain — drift-triggered
-    * retraining stays the doctor's job), then the stamp advances and
-    * ask()'s vector rung routes back through the index. Same
-    * return/fallback contract as [[refreshLexIndex]]; the rebuild path
-    * retrains via [[buildVecIndex]] with the index's own cluster count.
+    * retraining stays the doctor's job). The rebuild path retrains with
+    * the index's own cluster count.
     * @param rebuildIters Lloyd iterations if a full rebuild is forced */
-  def refreshVecIndex(rebuildIters: Int = 2): String = vecIndex match {
-    case None => throw new IllegalStateException(
-      "refreshVecIndex: no attached vector index (attachVecIndex first)")
-    case Some((path, nprobe)) =>
-      val fs = hfs(path)
-      // (index exists, stamp, torn-refresh marker)
-      def snapshot(): (Boolean, Option[Long], Boolean) =
-        (graft.vector.IvfIndex.exists(spark, path), readVecStamp(path),
-         fs.exists(vecPendingPath(path)))
-      // vacuum-blindness guard — see refreshLexIndex's breaksAppend
-      def breaksAppend(stampV: Long, cur: Long): Boolean =
-        frames.lastVacuumSeq > stampV ||
-        frames.log.filter(
-            col("commitSeq") > stampV && col("commitSeq") <= cur)
-          .filter(col("status") =!= graft.model.Frame.Active ||
-            col("supersedes").isNotNull)
-          .limit(1).count() > 0
-      def rebuild(exists: Boolean): String = {
-        val k = if (exists)
-          graft.vector.IvfIndex.read(spark, path).centroids.size else 4
-        buildVecIndex(path, k = math.max(k, 1), iters = rebuildIters,
-          nprobe = nprobe)
-        fs.delete(vecPendingPath(path), false)
-        "rebuilt"
-      }
-      val cur0 = currentVersion
-      val (exists0, stamp0, pending0) = snapshot()
-      // unlocked fast paths act on STABLE observations only — see
-      // refreshLexIndex (pending/unreadable-stamp must classify under
-      // the lock, or a peer's in-flight append reads as torn)
-      if (exists0 && !pending0 && stamp0.contains(cur0)) "fresh"
-      else if (exists0 && !pending0 && stamp0.isDefined &&
-               breaksAppend(stamp0.get, cur0)) rebuild(exists0)
-      else {
-        // ATOMIC append leg (see refreshLexIndex): re-classify under the
-        // index's maintenance lock so racing maintainers serialize
-        val outcome = graft.vector.IvfIndex.maintenanceLock(spark, path) {
-          val cur = currentVersion
-          val (exists, stamp, pending) = snapshot()
-          if (exists && !pending && stamp.contains(cur)) "fresh"
-          else if (!exists || stamp.isEmpty || pending ||
-                   breaksAppend(stamp.get, cur)) "needs_rebuild"
-          else {
-            val delta = frames.log.filter(
-              col("commitSeq") > stamp.get && col("commitSeq") <= cur)
-            val e = activeEmbedder
-            val embedUdf = udf((t: String) => e.embed(if (t == null) "" else t))
-            // the vector index covers DOCUMENT frames only (same
-            // population as embeddingsTable); delta is driver-small
-            val deltaVecs = delta.filter(col("role") === "document")
-              .select(col("id"),
-                embedUdf(coalesce(col("text"), lit(""))).as("vector"))
-              .localCheckpoint()
-            if (deltaVecs.isEmpty) {
-              val out = fs.create(vecStampPath(path), true)
-              out.write(cur.toString.getBytes("UTF-8")); out.close()
-            } else {
-              fs.create(vecPendingPath(path), true).close()
-              graft.vector.IvfIndex.appendUnlocked(spark, path, deltaVecs,
-                "id", "vector"): Unit
-              // restamp FIRST, then clear the marker: a crash in between
-              // costs one spurious rebuild, never a double-append
-              val out = fs.create(vecStampPath(path), true)
-              out.write(cur.toString.getBytes("UTF-8")); out.close()
-              fs.delete(vecPendingPath(path), false)
-            }
-            vecHandleCache = None
-            "appended"
-          }
-        }
-        if (outcome == "needs_rebuild")
-          rebuild(graft.vector.IvfIndex.exists(spark, path))
-        else outcome
-      }
+  def refreshVecIndex(rebuildIters: Int = 2): String = {
+    val ix = attached(vecIndex, "refreshVecIndex", "vector index",
+      "attachVecIndex")
+    ix.refresh(ix.train(ix.clusters, rebuildIters))
   }
 
   // ---- query ----
@@ -885,10 +340,11 @@ final class Graft(val spark: SparkSession, basePath: String,
     // corpus (same scores) while it is stale; without one, the fallback
     // occurrence scorer
     val ranked = lexIndex match {
-      case Some((t, stemmed)) =>
+      case Some(lx) =>
+        val t = lx.name
         val opts = Search.Options(topK = topK,
-          engine = Search.BM25Engine, stemmed = stemmed)
-        if (lexFreshOrHealed(t)) {
+          engine = Search.BM25Engine, stemmed = lx.stemmed)
+        if (lx.serving(healOnRead).isDefined) {
           lastSearchRoute = "indexed"
           // the sketch pre-filter rides the indexed route's allowed-id
           // semi-join as part of the ONE ranking query; it applies only
@@ -898,16 +354,18 @@ final class Graft(val spark: SparkSession, basePath: String,
           // while the sketch covers the whole store (stale sketch =
           // missing newest docs — skipping is the lossless direction)
           val allowed = sketchTable.filter(_ => !noSketch)
-            .filter(sketchFresh)
+            .flatMap(_.serving())
             .filter(_ => graft.search.QExpr
               .words(graft.search.QueryParser.parse(query)).exists(_.nonEmpty))
             .flatMap(sk => graft.search.SketchFilter.queryHash(query).map { qh =>
               lastSketchApplied = true
               // floor over LIVE ids only (dead versions' rows would count
               // toward the floor and take hamming-nearest slots). The
-              // postings are fresh on this route, so their doc_ids ARE
-              // the live frames with a token — the population the sketch
-              // rows cover (see the sketch section comment)
+              // postings are fresh on this route: they hold every token
+              // of every live frame and nothing else (a delete, supersede
+              // or vacuum past the stamp rebuilds them), so their doc_ids
+              // ARE the live frames with a token — the population sketch
+              // rows exist for (zero-token texts get no sketch)
               val live = spark.table(t).select(col("doc_id")).distinct()
               graft.search.SketchFilter.candidates(
                 spark.table(sk).join(live, Seq("doc_id"), "left_semi"),
@@ -984,10 +442,10 @@ final class Graft(val spark: SparkSession, basePath: String,
     // come from the nprobe index search (reference ≥1000-vector ANN
     // switch, src/vec.rs:23) and the semantic re-rank reads the same
     // persisted vectors; stale or absent → the pre-attach ladder
-    val vecServing = vecIndex.flatMap { case (p, nprobe) =>
-      vecHandleOrHealed(p).map { h =>
+    val vecServing = vecIndex.flatMap { v =>
+      v.serving(healOnRead).map { h =>
         (h.assigned.select(col("id"), col("vector")),
-         (qv: Array[Float], k: Int) => h.search("id", "vector", qv, k, nprobe))
+         (qv: Array[Float], k: Int) => h.search("id", "vector", qv, k, v.nprobe))
       }
     }
     lastAskVecRoute = if (vecServing.isDefined) "indexed" else "corpus"
@@ -997,14 +455,14 @@ final class Graft(val spark: SparkSession, basePath: String,
     // postings while the stamp is fresh, corpus-BM25 while stale — the
     // scores are bit-equal either way, only WHERE the work happens moves
     val lexServing: Option[(String, Int) => DataFrame] =
-      lexIndex.map { case (t, stemmed) =>
+      lexIndex.map { lx =>
         (q: String, k: Int) => {
           val opts = Search.Options(topK = k, withSnippets = false,
-            engine = Search.BM25Engine, stemmed = stemmed)
-          if (lexFreshOrHealed(t)) {
+            engine = Search.BM25Engine, stemmed = lx.stemmed)
+          if (lx.serving(healOnRead).isDefined) {
             lastAskLexRoute = "indexed"
             Search.searchIndexed(frames.latestActive, "id", frameCols, q,
-              t, opts)
+              lx.name, opts)
           } else {
             lastAskLexRoute = "corpus"
             Search.search(frames.latestActive, "id", frameCols, q, opts)
@@ -1041,7 +499,7 @@ final class Graft(val spark: SparkSession, basePath: String,
   }
 
   // ---- vector search over hash-embedded frames ----
-  private def activeEmbedder: Embedder =
+  private[api] def activeEmbedder: Embedder =
     embedder.getOrElse(new graft.ask.HashEmbedder(64))
 
   /** enrichment-stage embedding build: one vector per live document frame.

@@ -28,16 +28,19 @@ object Bm25Index {
     * warehouse path of the TABLE NAME (stable across the swap's
     * location changes): `<warehouse>/<table>.lock`. */
   private def withTableLock[T](spark: SparkSession, tableName: String)(body: => T): T =
-    graft.store.StoreLock.withLock(spark,
-      spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") + "/" + tableName,
+    graft.store.StoreLock.withLock(spark, lockAnchor(spark, tableName),
       graft.store.StoreLock.Options(timeoutMs = 120000L,
         staleGraceMs = 120000L, command = "bm25-index-maintenance"))(body)
 
+  /** the path the table's maintenance lockfile anchors on */
+  private[graft] def lockAnchor(spark: SparkSession, tableName: String): String =
+    spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") + "/" + tableName
+
   /** The table's maintenance lock, for callers composing a LARGER atomic
-    * section than one append — [[graft.api.Graft.refreshLexIndex]] holds
-    * it across its stamp-read → append → restamp so two maintainers
-    * cannot both classify against the same stale stamp and double-append
-    * the delta. The lock is NOT re-entrant: bodies must use
+    * section than one append — a serving-index refresh
+    * ([[graft.api.ServingIndex]]) holds it across its stamp-read → append
+    * → restamp so two maintainers cannot both classify against the same
+    * stale stamp and double-append the delta. The lock is NOT re-entrant: bodies must use
     * [[appendUnlocked]], never the self-locking public calls. */
   private[graft] def maintenanceLock[T](spark: SparkSession,
                                         tableName: String)(body: => T): T =
@@ -283,7 +286,13 @@ object Bm25Index {
     * leaves either the old index live or the new one; the only residue
     * is a stale `__old` / `__compact` table, and re-running compact
     * FINISHES the torn swap and returns (recovery branch below) — run
-    * compact once more for a fresh pass over any debt appended since. */
+    * compact once more for a fresh pass over any debt appended since.
+    *
+    * The swap installs a NEW catalog table, so the live table's
+    * properties (a serving index's stamp and torn-refresh marker among
+    * them) are carried across it: compaction is value-neutral, and every
+    * verdict they record still holds. A crash before they land leaves an
+    * unstamped, stale-looking table — the safe side. */
   def compact(spark: SparkSession, tableName: String,
               nBuckets: Int = 16): Unit = withTableLock(spark, tableName) {
     import org.apache.spark.sql.functions._
@@ -294,11 +303,15 @@ object Bm25Index {
     if (!spark.catalog.tableExists(tableName) &&
         spark.catalog.tableExists(tmpName)) {
       spark.sql(s"ALTER TABLE `$tmpName` RENAME TO `$tableName`")
-      if (spark.catalog.tableExists(oldName)) spark.sql(s"DROP TABLE `$oldName`")
+      if (spark.catalog.tableExists(oldName)) {
+        carryProperties(spark, properties(spark, oldName), tableName)
+        spark.sql(s"DROP TABLE `$oldName`")
+      }
       recoverPartitionsIfAny(spark, tableName)
       spark.catalog.refreshTable(tableName)
       return
     }
+    val props = properties(spark, tableName)
     // residue sweep from a crash before the aside-rename (live intact)
     if (spark.catalog.tableExists(tmpName)) spark.sql(s"DROP TABLE `$tmpName`")
     if (spark.catalog.tableExists(oldName)) spark.sql(s"DROP TABLE `$oldName`")
@@ -340,8 +353,22 @@ object Bm25Index {
       spark.sql(s"ALTER TABLE `$tmpName` RENAME TO `$tableName`")
       recoverPartitionsIfAny(spark, tableName)
     }
+    carryProperties(spark, props, tableName)
     spark.catalog.refreshTable(tableName)
   }
+
+  private def properties(spark: SparkSession, tableName: String): Map[String, String] =
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(tableName)).properties
+
+  private def carryProperties(spark: SparkSession, props: Map[String, String],
+                              tableName: String): Unit =
+    if (props.nonEmpty) {
+      val cat = spark.sessionState.catalog
+      val meta = cat.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(tableName))
+      cat.alterTable(meta.copy(properties = meta.properties ++ props))
+    }
 
   /** number of data files currently backing the index table — the
     * observable compaction shrinks (bounded: one recursive FS listing,

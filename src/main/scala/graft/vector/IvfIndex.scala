@@ -56,10 +56,10 @@ object IvfIndex {
         staleGraceMs = 120000L, command = "ivf-index-maintenance"))(body)
 
   /** The index's maintenance lock, for callers composing a LARGER atomic
-    * section than one append — [[graft.api.Graft.refreshVecIndex]] holds
-    * it across its stamp-read → append → restamp so two maintainers
-    * cannot both classify against the same stale stamp and append the
-    * same delta twice. NOT re-entrant: bodies must use
+    * section than one append — a serving-index refresh
+    * ([[graft.api.ServingIndex]]) holds it across its stamp-read →
+    * append → restamp so two maintainers cannot both classify against
+    * the same stale stamp and append the same delta twice. NOT re-entrant: bodies must use
     * [[appendUnlocked]], never the self-locking public calls. */
   private[graft] def maintenanceLock[T](spark: SparkSession,
                                         path: String)(body: => T): T =

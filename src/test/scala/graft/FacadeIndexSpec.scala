@@ -731,4 +731,139 @@ class FacadeIndexSpec extends SparkSpec {
     assert(!r2.rows.exists(_.name == "vec_index_stale"),
       "an absent stamp is 'never attached', not stale")
   }
+
+  private def properties(t: String): Map[String, String] =
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(t)).properties
+
+  private def corpusRows(g: Graft, q: String, stemmed: Boolean): Seq[(Long, Double)] =
+    rows(Search.search(g.frames.latestActive, "id",
+      FrameCols(text = coalesce(col("text"), lit("")), uri = col("uri"),
+        track = col("track"), kind = col("kind"), tags = col("tags"),
+        labels = col("labels"), timestamp = col("timestamp")),
+      q, Search.Options(topK = 10, engine = Search.BM25Engine,
+        stemmed = stemmed)))
+
+  /** a store with a fresh stemmed postings table, then one put whose
+    * refresh crashed between append and restamp: the delta's postings
+    * landed, the torn-refresh marker is set, the stamp is stale */
+  private def tornRefresh(t: String): Graft = {
+    val g = freshStore()
+    spark.sql(s"DROP TABLE IF EXISTS `$t`")
+    g.buildLexIndex(t)
+    val stamp = g.currentVersion
+    g.put("mv2://t/new", "fresh spark doc about joins")
+    graft.search.Bm25Index.append(g.frames.log.toDF()
+        .filter(col("commitSeq") > stamp)
+        .select(col("id"), coalesce(col("text"), lit("")).as("text")),
+      "id", "text", t, stemmed = true)
+    spark.sql(s"ALTER TABLE `$t` SET TBLPROPERTIES ('graft.refresh.pending' = '1')")
+    g
+  }
+
+  /** after a compaction of a torn table: the marker survived, so the
+    * refresh rebuilds and indexed scores equal the corpus engine's (an
+    * append of the same delta would double the new doc's frequencies) */
+  private def assertTornSurvives(g: Graft, t: String): Unit = {
+    assert(properties(t).get("graft.refresh.pending").contains("1"),
+      s"compaction dropped the torn-refresh marker: ${properties(t)}")
+    assert(g.refreshLexIndex() == "rebuilt")
+    val served = rows(g.search("spark joins", topK = 10))
+    assert(g.lastSearchRoute == "indexed")
+    assert(served == corpusRows(g, "spark joins", stemmed = true))
+    spark.sql(s"DROP TABLE IF EXISTS `$t`")
+  }
+
+  test("the doctor's compaction keeps the torn-refresh marker: the next refresh rebuilds") {
+    val t = "facade_lex_compact_torn_spec"
+    val g = tornRefresh(t)
+    val r = g.doctorRun(graft.api.Doctor.DoctorOptions(bm25FileBudget = Some(0)),
+      lexTable = Some(t), lexStemmed = true)
+    assert(r.rows.exists(x => x.name == "compact_lex_index" && x.executed))
+    assertTornSurvives(g, t)
+  }
+
+  test("streaming budget compaction keeps the torn-refresh marker: the next refresh rebuilds") {
+    val t = "facade_lex_stream_torn_spec"
+    val g = tornRefresh(t)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_torn")
+    val src = tmp.resolve("src").toString
+    java.nio.file.Files.createDirectories(tmp.resolve("src"))
+    java.nio.file.Files.write(tmp.resolve("src/batch.txt"),
+      "nothing new".getBytes("UTF-8"))
+    def created = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(t)).createTime
+    val before = created
+    // a trigger that adds no documents still pays the budget check: the
+    // table is over a zero budget, so it compacts
+    graft.streaming.StreamingIngest.runBm25IndexStream(spark, src, t,
+      tmp.resolve("ck").toString,
+      b => b.select(lit(-1L).as("doc_id"), col("text")).filter(lit(false)),
+      compactFileBudget = Some(0L)).awaitTermination()
+    assert(created > before, "the stream did not compact (no table swap)")
+    assertTornSurvives(g, t)
+  }
+
+  test("refresh classification: an attached artifact deleted on disk rebuilds; a vec update rebuilds") {
+    val g = freshStore()
+    val t = "facade_lex_cells_spec"
+    spark.sql(s"DROP TABLE IF EXISTS `$t`")
+    g.buildLexIndex(t, stemmed = false)
+    val vec = s"${tmpStore()}/vec"
+    g.buildVecIndex(vec, k = 2, iters = 1, nprobe = 2)
+    val fs = new org.apache.hadoop.fs.Path(vec)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val oldId = g.frames.latestActive.filter(col("uri") === "mv2://t/0")
+      .select("id").collect().head.getLong(0)
+    val cells: Seq[(String, () => Unit, () => String)] = Seq(
+      ("postings table dropped", () => spark.sql(s"DROP TABLE `$t`"): Unit,
+        () => g.refreshLexIndex()),
+      ("IVF directory deleted",
+        () => fs.delete(new org.apache.hadoop.fs.Path(vec), true): Unit,
+        () => g.refreshVecIndex()),
+      ("vec after update",
+        () => g.update(oldId, "rewritten spark doc about joins", "mv2://t/0"): Unit,
+        () => g.refreshVecIndex()))
+    cells.foreach { case (cell, mutate, refresh) =>
+      mutate()
+      assert(refresh() == "rebuilt", cell)
+    }
+    assert(graft.vector.IvfIndex.read(spark, vec).assigned
+      .filter(col("id") === oldId).isEmpty, "the superseded vector survived")
+    g.ask("spark joins", topK = 3)
+    assert(g.lastAskVecRoute == "indexed")
+    assert(g.refreshLexIndex() == "rebuilt") // the update, for the postings
+    val served = rows(g.search("spark joins", topK = 10))
+    assert(g.lastSearchRoute == "indexed")
+    assert(served == corpusRows(g, "spark joins", stemmed = false))
+    spark.sql(s"DROP TABLE IF EXISTS `$t`")
+  }
+
+  test("a refresh rebuild of a track-partitioned table keeps its layout and bucket count") {
+    val g = new Graft(spark, tmpStore())
+    texts.zipWithIndex.foreach { case (t, i) =>
+      g.put(s"mv2://t/$i", t, track = Some(if (i % 2 == 0) "even" else "odd"))
+    }
+    val tbl = "facade_tracked_rebuild_spec"
+    spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
+    g.buildLexIndex(tbl, stemmed = false, partitionByTrack = true)
+    def buckets = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(tbl)).bucketSpec.map(_.numBuckets)
+    val before = buckets
+    val dropId = g.frames.latestActive.filter(col("uri") === "mv2://t/3")
+      .select("id").collect().head.getLong(0)
+    g.delete(dropId)
+    assert(g.refreshLexIndex() == "rebuilt")
+    assert(spark.table(tbl).columns.contains("track"))
+    assert(buckets == before, s"buckets per partition $before -> $buckets")
+    val q = "track:even AND spark"
+    val served = rows(g.search(q, topK = 10))
+    assert(g.lastSearchRoute == "indexed")
+    assert(served == rows(Search.search(g.frames.latestActive, "id",
+      FrameCols(text = coalesce(col("text"), lit("")), uri = col("uri"),
+        track = col("track"), kind = col("kind"), tags = col("tags"),
+        labels = col("labels"), timestamp = col("timestamp")),
+      q, Search.Options(topK = 10, engine = Search.BM25Engine, stemmed = false))))
+    spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
+  }
 }

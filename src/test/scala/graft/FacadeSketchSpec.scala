@@ -152,4 +152,43 @@ class FacadeSketchSpec extends SparkSpec {
       "duplicate rows changed the candidate set")
     assert(clean.size >= 500, "floor must keep >= max(topK*10, 500)")
   }
+
+  test("sketch refresh classification: delete, update and a vacuum past the stamp append; a dropped table rebuilds") {
+    val g = new Graft(spark, tmpStore())
+    g.frames.put((0 until 30).map(i => (s"mv2://skc/$i",
+      s"spark join window doc$i with shared vocabulary")))
+    val skt = "facade_sketch_cells_sk"
+    spark.sql(s"DROP TABLE IF EXISTS `$skt`")
+    g.buildSketchTable(skt)
+    def idOf(uri: String) = g.frames.latestActive.filter(col("uri") === uri)
+      .select("id").collect().head.getLong(0)
+    // the sketch rows a fresh build over the current store would hold
+    def freshBuild = SketchFilter.build(g.frames.latestActive
+      .select(col("id"), coalesce(col("text"), lit("")).as("text")), "id", "text")
+    // the attached table's rows for live frames (dead versions' rows are
+    // inert); duplicates are kept, so a double append would show
+    def liveRows = spark.table(skt).join(
+      g.frames.latestActive.select(col("id").as("doc_id")), Seq("doc_id"), "left_semi")
+    def sorted(df: DataFrame) = df.select("doc_id", "simhash")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val qh = SketchFilter.queryHash("spark join").get
+    def candidates(df: DataFrame) = SketchFilter.candidates(df, qh, topK = 10)
+      .collect().map(_.getLong(0)).toSeq.sorted
+    val cells: Seq[(String, () => Unit)] = Seq(
+      "delete" -> (() => g.delete(idOf("mv2://skc/1"))),
+      "update" -> (() => g.update(idOf("mv2://skc/2"),
+        "rewritten spark join text", "mv2://skc/2"): Unit),
+      "vacuum past the stamp" -> (() => { g.delete(idOf("mv2://skc/3")); g.vacuum() }))
+    cells.foreach { case (cell, mutate) =>
+      mutate()
+      assert(g.refreshSketchTable() == "appended", cell)
+      assert(sorted(liveRows) == sorted(freshBuild), cell)
+      assert(candidates(liveRows) == candidates(freshBuild), cell)
+    }
+    spark.sql(s"DROP TABLE `$skt`")
+    assert(g.refreshSketchTable() == "rebuilt", "sketch table dropped")
+    assert(sorted(spark.table(skt)) == sorted(freshBuild))
+    assert(g.refreshSketchTable() == "fresh")
+    spark.sql(s"DROP TABLE IF EXISTS `$skt`")
+  }
 }

@@ -8,7 +8,9 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   * with a fresh postings table and sketch table attached: the sketch
   * pre-filter must ride the ranking query as a lazy plan (no driver action
   * before the ranking collect), and the page text comes from one bounded
-  * lookup. A failure prints every job it counted with its call site. */
+  * lookup. It also pins the jobs of each index refresh on an append-only
+  * ingest step: the delta is classified once, under the index's lock. A
+  * failure prints every job it counted with its call site. */
 class JobsPerCallSpec extends SparkSpec {
 
   /** a job: its id and the call site of the SQL action that ran it (an
@@ -77,6 +79,40 @@ class JobsPerCallSpec extends SparkSpec {
     Seq(withSketch, noSketch).foreach { jobs =>
       assert(jobs.headOption.exists(_.action.startsWith("collect at Search.scala")),
         s"a job ran before the ranking collect:${show(jobs)}")
+    }
+    Seq(lex, skt).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+  }
+
+  test("append-only ingest step: refreshLexIndex <= 4 jobs, refreshVecIndex <= 6, refreshSketchTable <= 1") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobs_per_refresh").toString
+    val g = new Graft(spark, s"$dir/store")
+    val vocab = Seq("spark", "join", "window", "shuffle", "stage", "task",
+      "broadcast", "partition", "memory", "index")
+    val rnd = new scala.util.Random(11)
+    g.frames.put((0 until 120).map(i => (s"mv2://jpr/$i",
+      Seq.fill(8 + rnd.nextInt(20))(vocab(rnd.nextInt(vocab.size))).mkString(" "))))
+    val lex = "jobs_per_refresh_lex"; val skt = "jobs_per_refresh_sk"
+    Seq(lex, skt).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    g.buildLexIndex(lex)
+    g.buildSketchTable(skt)
+    g.buildVecIndex(s"$dir/vec", k = 2, iters = 1, nprobe = 2)
+    val refreshes = Seq[(String, () => String, Int)](
+      ("refreshLexIndex", () => g.refreshLexIndex(), 4),
+      ("refreshVecIndex", () => g.refreshVecIndex(), 6),
+      ("refreshSketchTable", () => g.refreshSketchTable(), 1))
+    // one warm-up step, then the counted one: put one document, and each
+    // index catches up by append
+    (0 to 1).foreach { step =>
+      g.frames.put(Seq((s"mv2://jpr/new$step", s"spark join marker$step window")))
+      refreshes.foreach { case (name, refresh, limit) =>
+        var outcome = ""
+        val jobs = jobsOf { outcome = refresh() }
+        assert(outcome == "appended", s"$name: $outcome")
+        if (step == 1) {
+          info(s"$name: ${jobs.size} jobs${show(jobs)}")
+          assert(jobs.size <= limit, s"$name ran ${jobs.size} jobs:${show(jobs)}")
+        }
+      }
     }
     Seq(lex, skt).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
   }
